@@ -5415,7 +5415,6 @@ def q_kg_supergraph(spark, sf_dir):
 
     return supergraph(
         _kg_edges(spark, sf_dir),
-        iters=3,
         labels=_kg_lpa_labels(spark, sf_dir),
     )
 

@@ -650,10 +650,16 @@ def perplexity_buckets(
     """
     # a caller holding the materialized per-doc LM scores (the LM score
     # table is a published artifact in a curation stack) passes it via
-    # ``scores``; otherwise derive in-line. When ``scores`` is passed,
-    # ``lam_micro``/``text_col`` are ignored — the scores are whatever
-    # the published table was built with.
-    if scores is None:
+    # ``scores``; otherwise derive in-line. The scores are whatever that
+    # table was built with, so asking for another ``lam_micro`` or
+    # ``text_col`` alongside it is an error.
+    if scores is not None:
+        if (lam_micro, text_col) != (800_000, "text"):
+            raise ValueError(
+                "perplexity_buckets: lam_micro/text_col derive the scores "
+                "and cannot apply to a materialized scores= table"
+            )
+    else:
         scores = bigram_logprob(
             df, lam_micro=lam_micro, id_col=id_col, text_col=text_col
         )

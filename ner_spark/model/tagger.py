@@ -217,40 +217,56 @@ def _viterbi_chunk(score_list: list[np.ndarray], trans: np.ndarray) -> list[np.n
     if S == 0:
         return [np.zeros(0, dtype=np.int64) for _ in score_list]
     T = trans.shape[0]
-    scores = np.full((B, S, T), -1e30, dtype=np.float32)
+    # [step, row, tag]: each step reads one contiguous (B, T) slab. Steps
+    # past a row's length hold zeros; their values are never read back.
+    scores = np.zeros((S, B, T), dtype=np.float32)
     for b, s in enumerate(score_list):
-        if s.shape[0]:
-            scores[b, : s.shape[0]] = s
+        scores[: s.shape[0], b] = s
+    trans_by_next = np.ascontiguousarray(trans.T)  # [next, prev]
+    # rows whose last step is t: their trellis row is final after step t
+    ends: dict[int, list[int]] = {}
+    for b, L in enumerate(lens):
+        ends.setdefault(int(L) - 1, []).append(b)
 
-    trellis = np.empty((B, S, T), dtype=np.float32)
-    backp = np.zeros((B, S, T), dtype=np.int8)  # T=17 fits int8
-    trellis[:, 0] = scores[:, 0]
-    for t in range(1, S):
-        # (B, T_prev, T_next)
-        v = trellis[:, t - 1, :, None] + trans[None, :, :]
-        active = t < lens  # rows already past their length keep last trellis
-        best = v.max(axis=1)
-        bp = v.argmax(axis=1)
-        trellis[active, t] = scores[active, t] + best[active]
-        trellis[~active, t] = trellis[~active, t - 1]
-        backp[:, t] = bp
+    backp = np.empty((S, B, T), dtype=np.int8)  # T=17 fits int8
+    final = np.empty((B, T), dtype=np.float32)
+    cur = scores[0].copy()
+    v = np.empty((B, T, T), dtype=np.float32)
+    bp = np.empty((B, T), dtype=np.intp)
+    # flat offset of v[row, next, 0]: v.flat[base + bp] is the max
+    # that argmax picked, so max and argmax come from one reduction
+    base = np.arange(B * T) * T
+    for t in range(S):
+        if t:
+            # [row, next, prev], the reduction axis contiguous
+            np.add(cur[:, None, :], trans_by_next, out=v)
+            np.argmax(v, axis=2, out=bp)
+            np.add(scores[t], v.ravel()[base + bp.ravel()].reshape(B, T), out=cur)
+            backp[t] = bp
+        rows = ends.get(t)
+        if rows is not None:
+            final[rows] = cur[rows]
 
-    out = []
-    for b in range(B):
-        L = int(lens[b])
-        if L == 0:
-            out.append(np.zeros(0, dtype=np.int64))
-            continue
-        path = np.empty(L, dtype=np.int64)
-        path[L - 1] = int(np.argmax(trellis[b, L - 1]))
-        for t in range(L - 1, 0, -1):
-            path[t - 1] = backp[b, t, path[t]]
-        out.append(path)
-    return out
+    # traceback of all rows at once; a row joins at its own last step
+    last_tag = final.argmax(axis=1)
+    row_idx = np.arange(B)
+    paths = np.empty((B, S), dtype=np.int64)
+    tags = np.zeros(B, dtype=np.intp)
+    for t in range(S - 1, -1, -1):
+        rows = ends.get(t)
+        if rows is not None:
+            tags[rows] = last_tag[rows]
+        paths[:, t] = tags
+        if t:
+            tags = backp[t, row_idx, tags]
+    return [paths[b, :L] for b, L in enumerate(lens)]
+
+
+_TAG_NAME_ARRAY = np.array(TAG_NAMES, dtype=object)
 
 
 def tag_id_to_name(ids: np.ndarray) -> list[str]:
-    return [TAG_NAMES[int(i)] for i in ids]
+    return _TAG_NAME_ARRAY[ids].tolist()
 
 
 def tag_tokens_batch(token_lists: list[list[str]]) -> list[list[str]]:

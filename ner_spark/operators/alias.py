@@ -206,9 +206,15 @@ def alias_clusters(
     # (measured 14.3 s -> ~8 s on the sf0.1 bench graph). A caller that
     # already holds a materialized pair table (the production shape —
     # the review queue is a published table) passes it via ``pairs``;
-    # name_col/block_col/max_dist are then ignored — the pairs are
-    # whatever the published table was generated with.
-    if pairs is None:
+    # the pairs are whatever that table was generated with, so asking
+    # for other derivation parameters alongside it is an error.
+    if pairs is not None:
+        if (name_col, block_col, max_dist) != ("canonical_name", "entity_type", 2):
+            raise ValueError(
+                "alias_clusters: name_col/block_col/max_dist derive the "
+                "pairs and cannot apply to a materialized pairs= table"
+            )
+    else:
         pairs = alias_pairs(
             names, id_col, name_col, block_col, max_dist
         ).localCheckpoint()

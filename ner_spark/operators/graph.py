@@ -1140,6 +1140,14 @@ def random_walks(
     return cur.select("walk_id", F.array_join("path", "->").alias("path"))
 
 
+def _check_labels_iters(op: str, labels: DataFrame | None, iters: int) -> None:
+    if labels is not None and iters != 3:
+        raise ValueError(
+            f"{op}: iters derives the community labels and cannot apply "
+            f"to a materialized labels= table"
+        )
+
+
 def community_profiles(
     edges: DataFrame,
     iters: int = 3,
@@ -1170,8 +1178,9 @@ def community_profiles(
     # a caller holding the materialized community assignment (the
     # production shape — LPA labels are a published table the profile
     # job reads) passes it via ``labels``; otherwise derive in-line.
-    # When ``labels`` is passed, ``iters`` is ignored — the assignment
-    # is whatever the published table holds.
+    # The assignment is whatever that table holds, so a non-default
+    # ``iters`` alongside it is an error.
+    _check_labels_iters("community_profiles", labels, iters)
     if labels is None:
         labels = register_persist(label_propagation(edges, iters=iters))
     # und feeds only the e_lab derivation (itself persisted): no persist,
@@ -1884,6 +1893,7 @@ def supergraph(
 
     # same published-table contract as community_profiles: pass the
     # materialized assignment when one exists
+    _check_labels_iters("supergraph", labels, iters)
     if labels is None:
         labels = register_persist(label_propagation(edges, iters=iters))
     ls = labels.select(

@@ -15,6 +15,17 @@ all rows in parallel) decodes tag ids.
 Padding is per Arrow batch (dynamic batch max, exactly the reference's
 pad-to-batch-max trade — /root/reference/utils.py:103-108), sized by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+
+Per-task cost outside the UDF: pyspark's worker calls
+``importlib.invalidate_caches()`` before every task, which on CPython 3.11
+re-parses the directory of every zip on the worker's import path
+(``pyspark.zip`` and the spark-core jar, 14 importers in a tagging
+worker) — 170-580 ms of CPU per task. ``maybe_install_from_runtime``,
+which both iterators below call first, installs
+``artifact.install_zip_reread_gate`` once per worker, so later tasks
+re-read an archive only when it changed on disk.
+It lives there rather than in a ``spark.python.daemon.module`` because a
+``--py-files`` package is importable only after the per-task file set-up.
 """
 
 from __future__ import annotations

@@ -9,8 +9,6 @@ reference's alternative encodings for fixture use.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,13 +27,6 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan; filters/column selection applied by callers reach
-    the scan (PushedFilters/ReadSchema) because nothing here forces
-    materialization."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_vocabulary(spark: SparkSession, path: str) -> DataFrame:

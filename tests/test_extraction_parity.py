@@ -47,18 +47,35 @@ def test_bioes_batch_matches_oracle_randomized():
         assert {(m["pred"], m["obj"]) for m in ms} == want
 
 
-def test_batched_viterbi_matches_rowwise_oracle():
-    # ragged batch: the padded batched DP must equal per-row decode,
-    # including argmax tie-breaking
+def test_batched_viterbi_matches_rowwise_oracle(monkeypatch):
+    # ragged batch over more than two full row chunks plus one row long
+    # enough to trip the padded-cell budget: the chunked DP must equal
+    # per-row decode, including argmax tie-breaking
+    from ner_spark.model import tagger
+
+    chunk_sizes = []
+    chunk = tagger._viterbi_chunk
+
+    def recording_chunk(score_list, trans):
+        chunk_sizes.append([s.shape[0] for s in score_list])
+        return chunk(score_list, trans)
+
+    monkeypatch.setattr(tagger, "_viterbi_chunk", recording_chunk)
     rng = np.random.RandomState(3)
     trans = transitions()
-    token_lists = []
     vocab = ["acme", "power", "drill", "the", "order", "crimson", "oslo", "ada", "voss"]
-    for _ in range(64):
-        n = rng.randint(1, 20)
-        token_lists.append([vocab[rng.randint(len(vocab))] for _ in range(n)])
+    lengths = [0, 1, 0, 1] + list(rng.randint(0, 20, 480))
+    # the 484 short rows fill three chunks and leave 100 for the last,
+    # where 101 rows × 6k padded steps exceed the cell budget, so the
+    # long row must decode on its own
+    long_len = 6_000
+    lengths.insert(150, long_len)
+    token_lists = [[vocab[rng.randint(len(vocab))] for _ in range(n)] for n in lengths]
     logits = token_logits_batch(token_lists)
     batched = viterbi_batch(logits, trans)
+
+    assert sum(len(c) == tagger._VITERBI_CHUNK for c in chunk_sizes) > 2
+    assert [long_len] in chunk_sizes
     for lg, path in zip(logits, batched):
         assert list(path) == viterbi_decode(lg, trans)
 

@@ -230,3 +230,60 @@ def test_rolling_hash_edges_unicode_and_empty(spark):
     ).select("text", fingerprint_rolling(F.col("text")).alias("f"))
     got = {r["text"]: r["f"] for r in df.collect()}
     assert got == {"": 0, "ab": 4260552829731, "北京 test": 932548459117539}
+
+
+_MATERIALIZED_OVERRIDES = [
+    ("alias_clusters", {"name_col": "entity_type"}),
+    ("alias_clusters", {"block_col": None}),
+    ("alias_clusters", {"max_dist": 1}),
+    ("community_profiles", {"iters": 5}),
+    ("supergraph", {"iters": 5}),
+    ("perplexity_buckets", {"lam_micro": 500_000}),
+    ("perplexity_buckets", {"text_col": "title"}),
+]
+
+
+@pytest.mark.parametrize(
+    "op, override",
+    _MATERIALIZED_OVERRIDES,
+    ids=[f"{op}-{next(iter(kw))}" for op, kw in _MATERIALIZED_OVERRIDES],
+)
+def test_materialized_input_rejects_derivation_params(spark, op, override):
+    """A materialized pairs=/labels=/scores= table fixes how it was
+    derived; a non-default derivation parameter next to it is refused
+    instead of silently ignored. Default values (passed or not) keep
+    working."""
+    from ner_spark.functions.corpus import bigram_logprob, perplexity_buckets
+    from ner_spark.operators.alias import alias_clusters, alias_pairs
+    from ner_spark.operators.graph import (
+        community_profiles,
+        label_propagation,
+        supergraph,
+    )
+
+    if op == "alias_clusters":
+        names = spark.createDataFrame(
+            [("e1", "person", "jonathan"), ("e2", "person", "jonathaaan")],
+            "entity_id string, entity_type string, canonical_name string",
+        )
+        call = alias_clusters
+        args, kwargs = (names,), {"pairs": alias_pairs(names)}
+    elif op == "perplexity_buckets":
+        docs = spark.createDataFrame(
+            [(1, "the cat sat", "a"), (2, "the dog sat", "b")],
+            "doc_id long, text string, title string",
+        )
+        call = perplexity_buckets
+        args, kwargs = (docs,), {"scores": bigram_logprob(docs)}
+    else:
+        edges = spark.createDataFrame(
+            [("a1", "likes", "a2", 5), ("a2", "likes", "a3", 5)],
+            "src_entity string, pred string, dst_entity string, n_turns bigint",
+        )
+        call = {"community_profiles": community_profiles, "supergraph": supergraph}[op]
+        args, kwargs = (edges,), {"labels": label_propagation(edges, iters=3)}
+
+    with pytest.raises(ValueError, match="materialized"):
+        call(*args, **kwargs, **override)
+    defaults = {"iters": 3} if "iters" in override else {}
+    call(*args, **kwargs, **defaults)
