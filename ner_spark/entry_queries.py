@@ -1484,21 +1484,57 @@ def _golden(name: str) -> str:
     return os.path.join(FIXTURES_SQL_ROOT, name)
 
 
-_MENTIONS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_SESSION_TABLES: dict[tuple[str, str, str], object] = {}
+
+
+def _session_table(spark: SparkSession, name: str, sf_dir: str, build):
+    """The session's ``name`` table over the fixture of ``sf_dir``:
+    ``build()`` runs on the first request only, later requests get the
+    same object. Keyed on applicationId, not id(spark) — a NEW session
+    can reuse the id of a collected one and would be served DataFrames
+    bound to a dead SparkContext. An insert drops every other
+    session's entries, so the registry holds one live session."""
+    app = spark.sparkContext.applicationId
+    key = (app, name, _fx(sf_dir))
+    if key not in _SESSION_TABLES:
+        table = build()
+        for k in [k for k in _SESSION_TABLES if k[0] != app]:
+            del _SESSION_TABLES[k]
+        _SESSION_TABLES[key] = table
+    return _SESSION_TABLES[key]
 
 
 def _mentions(spark: SparkSession, fx: str) -> DataFrame:
     """Full tag+extract over the fixture transcripts, cached per session
-    (several kg_* queries reuse it). Keyed on applicationId — id(spark)
-    can be reused by a NEW session after the old one is collected,
-    serving DataFrames bound to a dead SparkContext."""
+    (several kg_* queries reuse it)."""
     from ner_spark.pipeline import build_mentions
 
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _MENTIONS_CACHE:
+    def build():
         t = spark.read.parquet(os.path.join(fx, "transcripts.parquet"))
-        _MENTIONS_CACHE[key] = build_mentions(t).cache()
-    return _MENTIONS_CACHE[key]
+        return build_mentions(t).cache()
+
+    return _session_table(spark, "mentions", fx, build)
+
+
+def _kg_links(spark, sf_dir) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(surface nodes, link edges, CC assignment) — the link →
+    canonicalize chain that the node, edge, canonical-triple and
+    canonical-map tables all start from, run once per session. The
+    assignment is eagerly localCheckpointed so its consumers share one
+    component solve."""
+    from ner_spark.operators.components import connected_components
+    from ner_spark.operators.linking import link_edges
+    from ner_spark.operators.relate import explode_mentions
+
+    def build():
+        m = _mentions(spark, _fx(sf_dir))
+        nodes, edges = link_edges(explode_mentions(m))
+        a = connected_components(
+            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
+        )
+        return nodes, edges, a.localCheckpoint(eager=True)
+
+    return _session_table(spark, "links", sf_dir, build)
 
 
 @query(
@@ -1580,11 +1616,7 @@ def q_kg_relations(spark, sf_dir):
 def q_kg_link_edges(spark, sf_dir):
     """M3 MinHash-LSH blocking + Jaccard link scorer vs the oracle's
     banded union-find input edges."""
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions
-
-    m = _mentions(spark, _fx(sf_dir))
-    _nodes, edges = link_edges(explode_mentions(m))
+    _nodes, edges, _a = _kg_links(spark, sf_dir)
     return edges.select(
         F.col("node_a").alias("src"), F.col("node_b").alias("dst")
     )
@@ -1599,15 +1631,7 @@ def q_kg_link_edges(spark, sf_dir):
 )
 def q_kg_canonical_map(spark, sf_dir):
     """M4 large-star/small-star connected components vs union-find."""
-    from ner_spark.operators.components import connected_components
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions
-
-    m = _mentions(spark, _fx(sf_dir))
-    nodes, edges = link_edges(explode_mentions(m))
-    a = connected_components(
-        nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-    )
+    _nodes, _edges, a = _kg_links(spark, sf_dir)
     return a.select(
         F.col("node_id").alias("node"), F.col("component").alias("canonical")
     )
@@ -2123,13 +2147,10 @@ def q_kg_bfs_hops(spark, sf_dir):
     — the ego-network retrieval primitive. Oracle = bounded-depth
     recursive CTE taking min hop per node (all-walks min ≡ BFS
     distance)."""
-    from ner_spark.functions.dedup import register_persist
     from ner_spark.operators.graph import bfs_hops
     from ner_spark.operators.linking import md5_hash60_col
 
-    # the edge frame feeds the node census AND the BFS loop — persist
-    # so the tag→link→CC lineage executes once (same device as PMI)
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = _kg_edges(spark, sf_dir)
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))
@@ -2610,11 +2631,10 @@ def q_kg_ego_edges(spark, sf_dir):
     md5-sampled sources as kg_bfs_hops (operators/graph.py:ego_edges)
     — the subgraph a retriever or GNN sampler consumes: two LEFT SEMI
     joins of the edge table against the BFS reach frame."""
-    from ner_spark.functions.dedup import register_persist
     from ner_spark.operators.graph import ego_edges
     from ner_spark.operators.linking import md5_hash60_col
 
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = _kg_edges(spark, sf_dir)
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))
@@ -2856,11 +2876,10 @@ def q_kg_bottleneck_paths(spark, sf_dir):
     semiring. Oracle = the relaxation unrolled to 3 rounds in SQL over
     the golden edge table (MATERIALIZED per round so the CTE chain
     doesn't inline exponentially)."""
-    from ner_spark.functions.dedup import register_persist
     from ner_spark.operators.graph import bottleneck_paths
     from ner_spark.operators.linking import md5_hash60_col
 
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = _kg_edges(spark, sf_dir)
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))
@@ -3069,24 +3088,19 @@ def q_turn_latency(spark, sf_dir):
     return turn_latency(t)
 
 
-_ALIAS_PAIRS_CACHE: dict = {}
-
-
 def _kg_alias_pairs_mat(spark, sf_dir):
     """PassJoin alias-pair table (operators/alias.py:alias_pairs over
     the canonical nodes), materialized ONCE per session via an eager
     localCheckpoint — the same production mirror as _kg_edges: the
     curation review queue is a materialized table that both the pair
     view and the cluster closure read, not a candidate join re-run per
-    consumer. Keyed on applicationId like the other session caches."""
+    consumer."""
     from ner_spark.operators.alias import alias_pairs
 
-    key = (spark.sparkContext.applicationId, _fx(sf_dir))
-    if key not in _ALIAS_PAIRS_CACHE:
-        _ALIAS_PAIRS_CACHE[key] = alias_pairs(
-            _kg_nodes(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    return _ALIAS_PAIRS_CACHE[key]
+    def build():
+        return alias_pairs(_kg_nodes(spark, sf_dir)).localCheckpoint(eager=True)
+
+    return _session_table(spark, "alias_pairs", sf_dir, build)
 
 
 def _kg_alias_clusters_oracle() -> str:
@@ -3439,13 +3453,9 @@ def q_tsv_corpus_scan(spark, sf_dir):
     """S3 combined-TSV corpus scan (text \\t labels —
     /root/reference/torch_version/data_tools.py:23-44). Quoting disabled
     on both engines so the file bytes are the contract."""
-    fx = _fx(sf_dir)
-    df = (
-        spark.read.option("sep", "\t")
-        .option("quote", "")
-        .schema("text string, tags string")
-        .csv(os.path.join(fx, "corpus.tsv"))
-    )
+    from ner_spark.sources.tables import read_tsv_corpus
+
+    df = read_tsv_corpus(spark, os.path.join(_fx(sf_dir), "corpus.tsv"))
     return df.select(
         "text", "tags", F.size(F.split("text", " ")).alias("n_tokens")
     )
@@ -3472,12 +3482,9 @@ def q_json_corpus_scan(spark, sf_dir):
     """S4 nested-JSON corpus scan (resume-zh shape {sentence, ner[]} —
     /root/reference/data_process.ipynb cell-2/3) with an explicit nested
     schema; mentions exploded to rows."""
-    fx = _fx(sf_dir)
-    schema = (
-        "conv_id string, turn_idx int, sentence array<string>, "
-        "ner array<struct<index: array<int>, type: string>>"
-    )
-    df = spark.read.schema(schema).json(os.path.join(fx, "corpus.jsonl"))
+    from ner_spark.sources.tables import read_json_corpus
+
+    df = read_json_corpus(spark, os.path.join(_fx(sf_dir), "corpus.jsonl"))
     return df.select(
         "conv_id",
         "turn_idx",
@@ -3944,9 +3951,6 @@ def q_unigram_logprob(spark, sf_dir):
     return unigram_logprob(_t(spark, sf_dir, "documents"))
 
 
-_BIGRAM_CACHE: dict = {}
-
-
 def _bigram_scores_mat(spark, sf_dir):
     """Per-document interpolated-bigram LM scores (functions/corpus.py:
     bigram_logprob over the documents table), materialized ONCE per
@@ -3955,12 +3959,11 @@ def _bigram_scores_mat(spark, sf_dir):
     instead of re-deriving the corpus count tables per consumer."""
     from ner_spark.functions.corpus import bigram_logprob
 
-    key = (spark.sparkContext.applicationId, _fx(sf_dir))
-    if key not in _BIGRAM_CACHE:
-        _BIGRAM_CACHE[key] = bigram_logprob(
-            _t(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-    return _BIGRAM_CACHE[key]
+    def build():
+        scores = bigram_logprob(_t(spark, sf_dir, "documents"))
+        return scores.localCheckpoint(eager=True)
+
+    return _session_table(spark, "bigram_scores", sf_dir, build)
 
 
 @query(
@@ -5054,9 +5057,6 @@ def q_pii_redact(spark, sf_dir):
 # ===========================================================================
 
 
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _kg_edges(spark, sf_dir) -> DataFrame:
     """Canonical KG edge table (same chain as q_kg_graph_edges),
     materialized ONCE per session via an eager localCheckpoint and
@@ -5066,54 +5066,29 @@ def _kg_edges(spark, sf_dir) -> DataFrame:
     query (PLANS.md asserts those operators over materialized edges
     for the same reason). The checkpoint also truncates the logical
     plan, so windowed/self-joining consumers don't replicate the
-    extraction lineage through their plans. Keyed on applicationId
-    like _MENTIONS_CACHE (id(spark) can be reused by a new session)."""
-    from ner_spark.operators.components import connected_components
+    extraction lineage through their plans."""
     from ner_spark.operators.graph import materialize_edges
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions, extract_relations
+    from ner_spark.operators.relate import extract_relations
 
-    fx = _fx(sf_dir)
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _EDGES_CACHE:
-        m = _mentions(spark, fx)
-        nodes, edges = link_edges(explode_mentions(m))
-        a = connected_components(
-            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-        )
-        _EDGES_CACHE[key] = materialize_edges(
-            extract_relations(m).distinct(), a
-        ).localCheckpoint(eager=True)
-    return _EDGES_CACHE[key]
+    def build():
+        _nodes, _edges, a = _kg_links(spark, sf_dir)
+        relations = extract_relations(_mentions(spark, _fx(sf_dir))).distinct()
+        return materialize_edges(relations, a).localCheckpoint(eager=True)
 
-
-_NODES_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return _session_table(spark, "edges", sf_dir, build)
 
 
 def _kg_nodes(spark, sf_dir) -> DataFrame:
     """Canonical KG node table (same chain as q_kg_graph_nodes),
     materialized once per session — the companion of _kg_edges for the
     alias / entity-card / negative-sampling consumers."""
-    from ner_spark.operators.components import connected_components
     from ner_spark.operators.graph import materialize_nodes
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions
 
-    fx = _fx(sf_dir)
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _NODES_CACHE:
-        m = _mentions(spark, fx)
-        nodes, edges = link_edges(explode_mentions(m))
-        a = connected_components(
-            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-        )
-        _NODES_CACHE[key] = materialize_nodes(nodes, a).localCheckpoint(
-            eager=True
-        )
-    return _NODES_CACHE[key]
+    def build():
+        nodes, _edges, a = _kg_links(spark, sf_dir)
+        return materialize_nodes(nodes, a).localCheckpoint(eager=True)
 
-
-_LPA_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return _session_table(spark, "nodes", sf_dir, build)
 
 
 def _kg_lpa_labels(spark, sf_dir) -> DataFrame:
@@ -5124,15 +5099,11 @@ def _kg_lpa_labels(spark, sf_dir) -> DataFrame:
     instead of re-running the iterative rounds per consumer."""
     from ner_spark.operators.graph import label_propagation
 
-    key = (spark.sparkContext.applicationId, _fx(sf_dir))
-    if key not in _LPA_CACHE:
-        _LPA_CACHE[key] = label_propagation(
-            _kg_edges(spark, sf_dir), iters=3
-        ).localCheckpoint(eager=True)
-    return _LPA_CACHE[key]
+    def build():
+        labels = label_propagation(_kg_edges(spark, sf_dir), iters=3)
+        return labels.localCheckpoint(eager=True)
 
-
-_CT_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return _session_table(spark, "lpa_labels", sf_dir, build)
 
 
 def _canonical_triples(spark, sf_dir) -> DataFrame:
@@ -5140,25 +5111,15 @@ def _canonical_triples(spark, sf_dir) -> DataFrame:
     chain as q_kg_canonical_triples), materialized once per session —
     the shared input of the verbalization / provenance / temporal /
     decay consumers."""
-    from ner_spark.operators.components import (
-        canonicalize_triples,
-        connected_components,
-    )
-    from ner_spark.operators.linking import link_edges
-    from ner_spark.operators.relate import explode_mentions, extract_relations
+    from ner_spark.operators.components import canonicalize_triples
+    from ner_spark.operators.relate import extract_relations
 
-    fx = _fx(sf_dir)
-    key = (spark.sparkContext.applicationId, fx)
-    if key not in _CT_CACHE:
-        m = _mentions(spark, fx)
-        nodes, edges = link_edges(explode_mentions(m))
-        a = connected_components(
-            nodes, edges, id_col="node_id", src_col="node_a", dst_col="node_b"
-        )
-        _CT_CACHE[key] = canonicalize_triples(
-            extract_relations(m), a, nodes
-        ).localCheckpoint(eager=True)
-    return _CT_CACHE[key]
+    def build():
+        nodes, _edges, a = _kg_links(spark, sf_dir)
+        relations = extract_relations(_mentions(spark, _fx(sf_dir)))
+        return canonicalize_triples(relations, a, nodes).localCheckpoint(eager=True)
+
+    return _session_table(spark, "canonical_triples", sf_dir, build)
 
 
 @query(
@@ -8242,11 +8203,10 @@ def q_kg_ppr(spark, sf_dir):
     integer grid — the "relevance around these entities" ranking a
     KG-RAG retriever reads (operators/graph.py:personalized_pagerank)
     vs an unrolled pure-SQL restatement in DuckDB."""
-    from ner_spark.functions.dedup import register_persist
     from ner_spark.operators.graph import personalized_pagerank
     from ner_spark.operators.linking import md5_hash60_col
 
-    edges = register_persist(_kg_edges(spark, sf_dir))
+    edges = _kg_edges(spark, sf_dir)
     nodes = (
         edges.select(F.col("src_entity").alias("x"))
         .unionByName(edges.select(F.col("dst_entity").alias("x")))

@@ -44,37 +44,25 @@ def load_vocabulary(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_tsv_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """S3 (/root/reference/torch_version/data_tools.py:23-44): one line =
-    ``text-tokens \\t label-tokens``."""
-    schema = T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("labels", T.StringType()),
-        ]
+    """S3 (reference torch_version/data_tools.py:23-44): one line =
+    ``text-tokens \\t tag-tokens`` -> (text, tags). Quoting is disabled,
+    so the file bytes are the contract."""
+    return (
+        spark.read.option("sep", "\t")
+        .option("quote", "")
+        .schema("text string, tags string")
+        .csv(path)
     )
-    return spark.read.csv(path, sep="\t", schema=schema)
 
 
 def read_json_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """S4 (/root/reference/data_process.ipynb cell-3): nested resume-zh
-    shape {sentence: [chars], ner: [{index: [int], type: str}]}."""
-    schema = T.StructType(
-        [
-            T.StructField("sentence", T.ArrayType(T.StringType())),
-            T.StructField(
-                "ner",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("index", T.ArrayType(T.IntegerType())),
-                            T.StructField("type", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-    return spark.read.json(path, schema=schema)
+    """S4 (reference data_process.ipynb cell-3): the nested resume-zh
+    shape {sentence: [chars], ner: [{index: [int], type: str}]}, one
+    object per turn keyed by (conv_id, turn_idx)."""
+    return spark.read.schema(
+        "conv_id string, turn_idx int, sentence array<string>, "
+        "ner array<struct<index: array<int>, type: string>>"
+    ).json(path)
 
 
 MAP_LITERAL_MAX_VOCAB = 8192

@@ -287,3 +287,67 @@ def test_materialized_input_rejects_derivation_params(spark, op, override):
         call(*args, **kwargs, **override)
     defaults = {"iters": 3} if "iters" in override else {}
     call(*args, **kwargs, **defaults)
+
+
+def test_kg_link_and_cc_built_once_per_session(spark, fixtures_small, monkeypatch):
+    """The link and CC queries and the canonical node / edge / triple
+    tables share one session build of the link graph and its component
+    assignment."""
+    import ner_spark.entry_queries as eq
+    from ner_spark.operators import components, linking
+
+    monkeypatch.setattr(eq, "_SESSION_TABLES", {})
+    calls = {"link_edges": 0, "connected_components": 0}
+
+    def count_calls(module, name):
+        fn = getattr(module, name)
+
+        def counted(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, counted)
+
+    count_calls(linking, "link_edges")
+    count_calls(components, "connected_components")
+    for name in (
+        "kg_link_edges",
+        "kg_canonical_map",
+        "kg_graph_nodes",
+        "kg_graph_edges",
+        "kg_canonical_triples",
+    ):
+        assert eq.QUERIES[name](spark, fixtures_small).count() > 0, name
+    assert calls == {"link_edges": 1, "connected_components": 1}
+
+
+def test_session_table_evicts_other_sessions(monkeypatch):
+    """A table is built once per session; the first request from a new
+    session rebuilds it and drops every entry of the old session."""
+    from types import SimpleNamespace
+
+    import ner_spark.entry_queries as eq
+
+    monkeypatch.setattr(eq, "_SESSION_TABLES", {})
+    monkeypatch.setattr(eq, "_fx", lambda sf_dir: sf_dir)
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    old, new = session("app-old"), session("app-new")
+    first = eq._session_table(old, "t", "fx", build)
+    eq._session_table(old, "u", "fx", build)
+    assert eq._session_table(old, "t", "fx", build) is first
+    assert len(builds) == 2
+
+    rebuilt = eq._session_table(new, "t", "fx", build)
+    assert len(builds) == 3 and rebuilt is builds[-1] and rebuilt is not first
+    assert list(eq._SESSION_TABLES) == [("app-new", "t", "fx")]
+    assert eq._session_table(new, "t", "fx", build) is rebuilt
+    assert len(builds) == 3
